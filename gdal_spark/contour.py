@@ -54,6 +54,15 @@ CASES: dict[int, list[tuple[int, int]]] = {
 CONTOUR_LINES_PX = 128
 LEVELS = (52.5, 105.5)
 
+# Seam-edge count up to which _labeled_segments merges local parts with a
+# driver union-find; above it the distributed propagate_labels loop runs.
+# Sized in bytes: an edge row is two int64 labels (~16 B + ~40 B Row
+# overhead collected), so the driver copy tops out ≈ 11 MB plus a dict of
+# ≤ 400k int keys (~30 MB) — well under one task's memory; at 200k+ seam
+# crossings the O(log d) pointer-jump rounds amortize and the
+# distributed path wins anyway.
+DRIVER_MERGE_MAX = 200_000
+
 _SEG_SCHEMA = ("li int, na long, nb long, lroot long, kind int, "
                "v double, b int")
 
@@ -124,7 +133,7 @@ def contour_segments(tiles: DataFrame, raster_px: int,
              "tx", "ty", "data") \
      .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((t + 2, t + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
@@ -268,8 +277,7 @@ def _seg_exprs(w: int, engine: str,
 
 
 def _labeled_segments(tiles: DataFrame, raster_px: int,
-                      thresholds=LEVELS,
-                      driver_merge_max: int = 200_000) -> DataFrame:
+                      thresholds=LEVELS) -> DataFrame:
     """Globally-labeled iso-segments: (li, comp, na, nb, v, b) — the
     shared front half of contour_lines / contour_linestrings."""
     from gdal_spark.polygonize import propagate_labels
@@ -284,18 +292,13 @@ def _labeled_segments(tiles: DataFrame, raster_px: int,
              .select("la", "lb").distinct())
     # merge the edge-incident subgraph only — the cross-tile merge graph
     # is O(seam crossings), far smaller than the part count; parts
-    # untouched by any seam keep their local label (coalesce). Below
-    # `driver_merge_max` edges the merge is a driver union-find (a seam
+    # untouched by any seam keep their local label (coalesce). Up to
+    # DRIVER_MERGE_MAX edges the merge is a driver union-find (a seam
     # chain of k crossings costs k pointer hops, not k join rounds); the
     # distributed pointer-jump loop is the large-scale path — the same
     # two-regime split GDAL's contour writer applies per chunk.
-    # 200k default sized in bytes: an edge row is two int64 labels
-    # (~16 B + ~40 B Row overhead collected), so the driver copy tops
-    # out ≈ 11 MB plus a dict of ≤ 400k int keys (~30 MB) — well under
-    # one task's memory; at 200k+ seam crossings the O(log d)
-    # pointer-jump rounds amortize and the distributed path wins anyway.
     n_edges = edges.count()
-    if n_edges <= driver_merge_max:
+    if n_edges <= DRIVER_MERGE_MAX:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -323,14 +326,12 @@ def _labeled_segments(tiles: DataFrame, raster_px: int,
 
 
 def contour_lines(tiles: DataFrame, raster_px: int = CONTOUR_LINES_PX,
-                  thresholds=LEVELS,
-                  driver_merge_max: int = 200_000) -> DataFrame:
+                  thresholds=LEVELS) -> DataFrame:
     """Stitched contour polylines: one row per connected line per level.
 
     (level, comp = min crossing-node id, n_segments, closed, len_sum)
     """
-    per_seg = _labeled_segments(tiles, raster_px, thresholds,
-                                driver_merge_max)
+    per_seg = _labeled_segments(tiles, raster_px, thresholds)
     agg = per_seg.groupBy("li", "comp").agg(
         F.expr("collect_list(struct(na, nb, v))").alias("arr"),
         F.count(F.lit(1)).alias("n_segments"),
@@ -443,8 +444,7 @@ def _micro(c: np.ndarray) -> np.ndarray:
 
 def contour_linestrings(tiles: DataFrame,
                         raster_px: int = CONTOUR_LINES_PX,
-                        thresholds=LEVELS,
-                        driver_merge_max: int = 200_000) -> DataFrame:
+                        thresholds=LEVELS) -> DataFrame:
     """Stitched contour LINESTRINGS: one row per connected line per
     level with ordered-vertex geometry (the real GDALContourGenerate
     output shape, alg/contour.cpp:393 + alg/marching_squares/).
@@ -467,12 +467,11 @@ def contour_linestrings(tiles: DataFrame,
     """
     import struct
 
-    per_seg = _labeled_segments(tiles, raster_px, thresholds,
-                                driver_merge_max)
+    per_seg = _labeled_segments(tiles, raster_px, thresholds)
     w = raster_px
     levels = list(thresholds)
 
-    def trace(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def trace(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         li, comp = int(key[0]), int(key[1])
         thr = levels[li]
         na = pdf["na"].to_numpy(np.int64)

@@ -631,7 +631,7 @@ def _synth_compare_tiles(spark: SparkSession, which: str) -> DataFrame:
         .cast("int").alias("_band"))
     perturbed = which == "new"
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty, band = int(key[0]), int(key[1]), int(key[2])
         gy, gx = np.mgrid[0:TILE_PX, 0:TILE_PX]
         gx = (gx + tx * TILE_PX).astype(np.int64)
@@ -1141,8 +1141,8 @@ def q_sieve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sieve8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gdal_sieve -8 (GDALSieveFilter 8CONNECTED,
     alg/gdalsievefilter.cpp): diagonal adjacency keeps corner-touching
-    singletons alive — two extra diagonal equi-joins in the label
-    graph; same checksum output as raster_sieve."""
+    singletons alive — two extra diagonal steps in the tile labeler's
+    kernel and border join; same checksum output as raster_sieve."""
     from gdal_spark.polygonize import sieve_pixels
     from gdal_spark.raster import pixel_counts, tiles_from_pixel_counts
 
@@ -1517,8 +1517,8 @@ def q_polygonize_components8(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """GDALPolygonize 8CONNECTED=8 (alg/polygonize.cpp:87): the same
     banded fixture as contour_polygons labeled with DIAGONAL adjacency —
-    components that touch only at corners merge; the distributed path
-    adds the two downward-diagonal cross-tile border joins. Oracle: the
+    components that touch only at corners merge; the tile labeler adds
+    the two diagonal steps in-tile and across the tile borders. Oracle: the
     same independent single-machine BFS with 8 neighbors."""
     from gdal_spark.contour import CONTOUR_LINES_PX
     from gdal_spark.polygonize import polygonize_by_value

@@ -92,7 +92,7 @@ def tiles_from_pixel_counts(px: DataFrame, z: int, clamp: int | None = None,
     tile_px = TILE_PX
     np_dtype = np.dtype(dtype)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         buf = np.zeros((tile_px, tile_px), dtype=np_dtype)
         py = (pdf["gy"].to_numpy() - ty * tile_px).astype(np.int64)
@@ -164,11 +164,19 @@ def compare_tile_bands(golden: DataFrame, new: DataFrame,
     checksum sum, diff count, max |diff|) are the only rows entering
     the final per-band aggregation. At 100 TB each pixel payload
     crosses exactly one exchange (its own co-partitioning shuffle)
-    and the band rollup moves O(tiles) 5-int rows."""
+    and the band rollup moves O(tiles) 5-int rows. A (band, tx, ty)
+    tile that occurs twice on either side raises ValueError: there is
+    no single pixel payload to compare it against."""
     np_dtype = np.dtype(dtype)
 
-    def per_pair(key, gpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
+    def per_pair(key: tuple, gpdf: pd.DataFrame,
+                 npdf: pd.DataFrame) -> pd.DataFrame:
         band = int(key[0])
+        if len(gpdf) > 1 or len(npdf) > 1:
+            raise ValueError(
+                f"compare_tile_bands: duplicate (band, tx, ty) tile"
+                f" {tuple(int(k) for k in key)}: golden has {len(gpdf)},"
+                f" new has {len(npdf)}")
         gbuf = (np.frombuffer(gpdf["data"].iloc[0], dtype=np_dtype)
                 .astype(np.int64) if len(gpdf) else None)
         nbuf = (np.frombuffer(npdf["data"].iloc[0], dtype=np_dtype)
@@ -267,7 +275,7 @@ def overview_sum(tiles: DataFrame, dtype: str = "int64",
     if resampler not in ("sum", "average", "mode", "rms"):
         raise ValueError(resampler)
 
-    def reduce_children(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def reduce_children(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ptx, pty = int(key[0]), int(key[1])
         z = int(pdf["z"].iloc[0]) - 1
         out = np.zeros((tile_px, tile_px), dtype=np_dtype)
@@ -809,7 +817,7 @@ def halo_gradient(tiles: DataFrame, raster_px: int,
              "tx", "ty", "data") \
      .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((tile_px + 2, tile_px + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
@@ -870,7 +878,7 @@ def halo_tri_tpi_roughness(tiles: DataFrame, raster_px: int,
              "tx", "ty", "data") \
      .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((tile_px + 2, tile_px + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
@@ -1022,7 +1030,7 @@ def synth_dem_tiles(spark, raster_px: int = 256,
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         gx = gx + tx * tile_px
@@ -1070,7 +1078,7 @@ def synth_collar_tiles(spark, raster_px: int,
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         gx = gx + tx * tile_px
@@ -1105,7 +1113,7 @@ def synth_overlay_tiles(spark, raster_px: int,
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         gx = gx + tx * tile_px
@@ -1319,7 +1327,7 @@ def contour_cells(tiles: DataFrame, raster_px: int, threshold: float,
              "tx", "ty", "data") \
      .filter(f"htx >= 0 and htx < {n_tiles} and hty >= 0 and hty < {n_tiles}")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         htx, hty = int(key[0]), int(key[1])
         win = np.zeros((t + 2, t + 2), dtype=np.int64)
         for _, row in pdf.iterrows():
@@ -1429,7 +1437,7 @@ def synth_band_tiles(spark, formula_np, raster_px: int = 256,
         (F.col("id") % n_tiles).alias("_tx"),
         (F.col("id") / n_tiles).cast("long").alias("_ty"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         gy, gx = np.mgrid[0:tile_px, 0:tile_px]
         vals = formula_np(gx + tx * tile_px, gy + ty * tile_px) \

@@ -80,7 +80,7 @@ def _tilecover_expr() -> str:
             f" y -> struct(x as tx, y as ty))))")
 
 
-def _burn_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _burn_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     tx, ty = int(key[0]), int(key[1])
     gx = np.arange(tx * TILE_PX, (tx + 1) * TILE_PX, dtype=np.int64)
     gy = np.arange(ty * TILE_PX, (ty + 1) * TILE_PX, dtype=np.int64)

@@ -84,7 +84,7 @@ def stateful_zone_totals(pages: DataFrame) -> DataFrame:
                        cells.cell_id_col("lon", "lat", CELL_ZOOM)),
         build_zone_index_from_defs(zone_defs()), how="inner")
 
-    def update(key, pdfs, state: GroupState):
+    def update(key: tuple, pdfs, state: GroupState):
         n_new = sum(len(p) for p in pdfs)
         total = (state.get[0] if state.exists else 0) + n_new
         state.update((total,))

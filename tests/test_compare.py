@@ -78,3 +78,15 @@ def test_compare_one_sided_tile(spark):
     assert r.pixels_differing == 9
     assert r.max_pixel_difference == 8
     assert r.found_diff == 1
+
+
+def test_compare_duplicate_tile_raises(spark):
+    # a (band, tx, ty) tile twice in the golden table has no single
+    # payload to compare against: the compare fails instead of reading
+    # the first copy
+    from gdal_spark.queries.raster import _synth_compare_tiles
+
+    golden = _synth_compare_tiles(spark, "golden")
+    dup = golden.unionByName(golden.filter("band = 2 and tx = 1 and ty = 0"))
+    with pytest.raises(Exception, match="duplicate"):
+        compare_tile_bands(dup, _synth_compare_tiles(spark, "new")).collect()

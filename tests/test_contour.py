@@ -194,3 +194,18 @@ def test_linestrings_agree_with_contour_lines(spark):
             == (b["n_points"] - 1).to_numpy()).all()
     assert (a["len_sum"].to_numpy() == b["len_sum"].to_numpy()).all()
     assert (a["closed"].to_numpy() == b["closed"].to_numpy()).all()
+
+
+def test_distributed_merge_matches_driver_merge(spark, lines, monkeypatch):
+    """With DRIVER_MERGE_MAX = 0 the seam merge runs the distributed
+    propagate_labels loop; its rows equal the driver union-find's."""
+    from gdal_spark import contour
+
+    monkeypatch.setattr(contour, "DRIVER_MERGE_MAX", 0)
+    dist = contour_lines(synth_dem_tiles(spark, CONTOUR_LINES_PX),
+                         CONTOUR_LINES_PX).toPandas()
+    cols = sorted(lines.columns)
+    a = lines[cols].sort_values(cols).reset_index(drop=True)
+    b = dist[cols].sort_values(cols).reset_index(drop=True)
+    assert len(a) > 10
+    assert a.equals(b)
