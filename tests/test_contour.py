@@ -197,13 +197,23 @@ def test_linestrings_agree_with_contour_lines(spark):
 
 
 def test_distributed_merge_matches_driver_merge(spark, lines, monkeypatch):
-    """With DRIVER_MERGE_MAX = 0 the seam merge runs the distributed
-    propagate_labels loop; its rows equal the driver union-find's."""
-    from gdal_spark import contour
+    """With DRIVER_MERGE_MAX = -1 the seam merge always runs the
+    distributed propagate_labels loop (even with no seam edge); its rows
+    equal the driver union-find's."""
+    from gdal_spark import contour, polygonize
 
-    monkeypatch.setattr(contour, "DRIVER_MERGE_MAX", 0)
+    calls = []
+    real = polygonize.propagate_labels
+
+    def spy(parts, edges):
+        calls.append(edges.count())
+        return real(parts, edges)
+
+    monkeypatch.setattr(contour, "DRIVER_MERGE_MAX", -1)
+    monkeypatch.setattr(polygonize, "propagate_labels", spy)
     dist = contour_lines(synth_dem_tiles(spark, CONTOUR_LINES_PX),
                          CONTOUR_LINES_PX).toPandas()
+    assert len(calls) == 1 and calls[0] > 0
     cols = sorted(lines.columns)
     a = lines[cols].sort_values(cols).reset_index(drop=True)
     b = dist[cols].sort_values(cols).reset_index(drop=True)
